@@ -10,8 +10,8 @@ Layout
 - ``catalog``    : test-table loader/registrar for the TPC-H-ish synthetic data.
 - ``functions``  : scalar/text/vector helpers (built-in ``pyspark.sql.functions``
                    compositions; Pandas UDFs only where unavoidable).
-- ``operators``  : merge_upsert, window dedup, DQ checks, dedup family,
-                   similarity search, multimodal plumbing.
+- ``operators``  : txlog tables + merge_upsert, window dedup, DQ checks,
+                   dedup family, similarity search, multimodal plumbing.
 - ``sources``    : HTTP API source (driver-side), file readers with explicit schemas.
 - ``pipeline``   : the medallion weather ETL (extract → normalize → L1 → L2).
 - ``queries``    : the query registry — every entry pairs a Spark DataFrame

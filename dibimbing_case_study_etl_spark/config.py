@@ -26,8 +26,9 @@ DEFAULT_OPEN_METEO: dict[str, Any] = {
 
 @dataclass
 class StorageConfig:
-    """Path layout of the medallion zones. Any Hadoop-compatible scheme
-    works (local FS for tests, s3a:// for MinIO/S3 in production)."""
+    """Path layout of the medallion zones. Raw and staging take any
+    Hadoop-compatible scheme (local FS for tests, s3a:// for MinIO/S3 in
+    production); the L1/L2 txlog tables need local/POSIX paths."""
 
     base_dir: str
     raw_dir: str = ""

@@ -1,6 +1,7 @@
 """Engine operators: the pieces Spark doesn't ship as a single call.
 
-- ``merge_upsert``  : keyed upsert over plain Parquet (reference's ON CONFLICT).
+- ``txlog``         : transactional commit-log tables (the L1/L2 table layer).
+- ``merge_upsert``  : keyed upsert into a txlog table (reference's ON CONFLICT).
 - ``dedup_window``  : latest-per-key dedup (reference's W1 window).
 - ``quality``       : declarative DQ checks (reference's normalize assertions).
 - ``dedup``         : exact + near-duplicate detection family (north star).

@@ -394,47 +394,6 @@ def _minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return coeffs
 
 
-def _sig_array(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """(doc_id, sig array<long>) MinHash signatures from a shingle index.
-
-    The per-shingle base hash x = xxhash64(shingle) mod P stays JVM-side
-    (xxhash64 has no Python twin); the ``num_hashes`` affine transforms +
-    min-reduce run as ONE Arrow-batched numpy kernel per document group.
-    int64 arithmetic is exact (a·x < 2^62), so the signatures are
-    bit-identical to the equivalent JVM aggregate — but the numpy kernel
-    avoids generating ``num_hashes`` aggregate expressions, whose
-    whole-stage codegen both compiles slowly and JITs poorly (measured
-    ~10× slower steady-state than the GEMM-shaped numpy loop).
-    """
-    import numpy as np
-    import pandas as pd
-
-    coeffs = _minhash_coeffs(num_hashes)
-    a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)
-    b_vec = np.array([b for _, b in coeffs], dtype=np.int64)
-
-    def sig_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf["x"].to_numpy(dtype=np.int64)
-        m = (x[:, None] * a_vec[None, :] + b_vec[None, :]) % _P
-        return pd.DataFrame({"doc_id": [pdf["__id"].iloc[0]], "sig": [m.min(axis=0)]})
-
-    hashed = sh.select("__id", F.pmod(F.xxhash64("__s"), F.lit(_P)).alias("x"))
-    return hashed.groupBy("__id").applyInPandas(sig_fn, schema="doc_id long, sig array<long>")
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 128
-) -> DataFrame:
-    """Per-document MinHash signature: x = xxhash64(shingle) mod P once,
-    then ``num_hashes`` affine transforms min-aggregated per doc — one
-    shuffle keyed by doc id, signature width independent of doc length."""
-    sh = _shingle_index(df, id_col, text_col, k)
-    sig = _sig_array(sh, num_hashes)
-    return sig.select(
-        "doc_id", *[F.element_at("sig", i + 1).alias(f"mh_{i}") for i in range(num_hashes)]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -524,19 +483,17 @@ def minhash_lsh_pairs(
         )
     LAST_LSH_DOWNGRADED_BUCKETS = downgrade_acc
     rows = num_hashes // bands
-    # lazy persist: the EAGER candidates materialization below runs the
-    # banding pass (reps → groups) first, which populates this cache
-    # before any of the fan-out consumers (verify shingle sides, members
-    # expansion, within-group pairs) can race on it — one action instead
-    # of two per build
+    # eager: the fan-out consumers (verify shingle sides, members
+    # expansion, within-group pairs) must never compute a lazy checkpoint
+    # concurrently — racing sibling stages over one lazily-checkpointed
+    # RDD can deadlock the DAG scheduler against a broadcast thread
     groups = _materialize(
         df.select(F.col(id_col).alias("__gid"), F.col(text_col).alias("__gtext"))
         .groupBy(F.xxhash64("__gtext").alias("__gh"), "__gtext")
         .agg(
             F.min("__gid").alias("__rep"),
             F.sort_array(F.collect_list("__gid")).alias("__members"),
-        ),
-        eager=False,
+        )
     )
     reps = groups.select(F.col("__rep").alias(id_col), F.col("__gtext").alias(text_col))
     # Candidate generation runs as ONE shuffle-free mapInPandas pass over

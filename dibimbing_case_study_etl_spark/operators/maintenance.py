@@ -274,8 +274,8 @@ def forget_keys(
 
     affected = df.filter(F.col(partition_col).isin(affected_parts))
     remaining = affected.join(F.broadcast(keys), key_cols, "left_anti")
-    # Self-referential overwrite: same pattern as merge_upsert — cut the
-    # lineage so the write doesn't read the files it replaces.
+    # Self-referential overwrite: cut the lineage so the write doesn't
+    # read the files it replaces.
     remaining = remaining.localCheckpoint(eager=True)
     n_kept = remaining.count()
     # dynamic overwrite only replaces partitions PRESENT in the written

@@ -28,10 +28,6 @@ from pyspark.sql import functions as F
 
 BLOB_SCHEMA = "doc_id bigint, content binary, meta struct<format string, n_bytes bigint>"
 FEATURE_SCHEMA = "doc_id bigint, n_bytes bigint, checksum bigint"
-IMAGE_FEATURE_SCHEMA = (
-    "doc_id bigint, orig_w bigint, orig_h bigint, new_w bigint, new_h bigint, "
-    "n_pixels bigint, checksum bigint"
-)
 
 
 def to_blob_table(df: DataFrame, id_col: str, text_col: str, fmt: str = "txt") -> DataFrame:
@@ -111,55 +107,6 @@ def decode_features(blobs: DataFrame, stub: bool = True) -> DataFrame:
                 )
 
     return blobs.mapInPandas(extract, schema=FEATURE_SCHEMA)
-
-
-def synth_image_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Deterministic fake-image table: the content is the document's bytes
-    (stand-in pixels) and the typed metadata struct carries dimensions
-    derived from the id — exercising the real multimodal layout (binary +
-    struct<format, width, height>) without image libraries."""
-    content = F.encode(F.col(text_col), "UTF-8")
-    did = F.col(id_col).cast("bigint")
-    return df.select(
-        did.alias("doc_id"),
-        content.alias("content"),
-        F.struct(
-            F.lit("fake-rgb").alias("format"),
-            (16 + did % 64).alias("width"),
-            (16 + (did * 7) % 64).alias("height"),
-        ).alias("meta"),
-    )
-
-
-def resize_images(images: DataFrame, stub: bool = True) -> DataFrame:
-    """'Resize' pass over the image table via Arrow-batched ``mapInPandas``:
-    halves each dimension (floor, min 1) and reports the resulting pixel
-    count plus a content checksum. The pixel decode/resample itself is the
-    stubbed step (`_decode_real`); the metadata math, batching, schema, and
-    partitioning are the real deployment shape."""
-    images = images.repartition(images.sparkSession.sparkContext.defaultParallelism, "doc_id")
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not stub:  # pragma: no cover - deployment path
-                [_decode_real(b) for b in pdf["content"]]
-            w = pdf["meta"].map(lambda m: m["width"]).astype("int64")
-            h = pdf["meta"].map(lambda m: m["height"]).astype("int64")
-            new_w = (w // 2).clip(lower=1)
-            new_h = (h // 2).clip(lower=1)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "orig_w": w,
-                    "orig_h": h,
-                    "new_w": new_w,
-                    "new_h": new_h,
-                    "n_pixels": new_w * new_h,
-                    "checksum": pdf["content"].map(lambda b: sum(b) % 65536).astype("int64"),
-                }
-            )
-
-    return images.mapInPandas(resize, schema=IMAGE_FEATURE_SCHEMA)
 
 
 RESIZE_REAL_SCHEMA = (

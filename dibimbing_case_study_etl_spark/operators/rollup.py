@@ -63,9 +63,10 @@ def merge_rollup(
     """Merge one batch into the persistent rollup state at ``state_path``.
 
     Reads ONLY the time-bucket partitions the batch touches, merges the
-    partial state, and rewrites just those partitions (dynamic overwrite —
-    same crash/idempotency posture as ``merge_upsert``, cf.
-    `operators/merge_upsert.py`)."""
+    partial state, and rewrites just those partitions (dynamic overwrite:
+    a rerun of the batch converges; a crash mid-overwrite can leave a
+    partition half-replaced, so transactional state belongs in a
+    ``TxLogTable``, cf. `operators/txlog.py`)."""
     keys = list(keys)
     partial = rollup_partials(batch, bucket_col, keys, value_col)
 

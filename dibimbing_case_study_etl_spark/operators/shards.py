@@ -187,8 +187,8 @@ def land_shard_stream(
     global repack of the existing corpus when new data arrives, which is
     the property that makes this O(new data) instead of O(corpus).
 
-    Single-writer contract: one stream owns ``out_path`` (same contract
-    merge_upsert documents for its Parquet sinks).
+    Single-writer contract: one stream owns ``out_path`` (plain Parquet
+    sinks have no commit protocol; multi-writer tables use ``TxLogTable``).
     """
     from dibimbing_case_study_etl_spark.streaming.documents_stream import (
         hygiene_pass,

@@ -4,11 +4,11 @@ The reference gets atomicity, upsert isolation, and multi-writer safety
 from Postgres transactions (reference
 ``scripts/load_parquet_to_postgres_l1.py:124-149`` — one connection, one
 ``execute_values`` batch, one COMMIT). A Spark warehouse writing parquet
-to a filesystem/object store has none of that natively, and r4's
-advisory-lock MERGE (``operators/merge_upsert.py``) only serializes
-writers on one host. This module closes the gap the r4 verdict called
-out ("Multi-writer transactionality") with the same design the public
-lakehouse formats (Delta Lake, Iceberg) use — re-expressed minimally:
+to a filesystem has none of that natively. This module is the engine's
+one table layer — the medallion L1/L2 tables
+(``pipeline/weather.py``, through ``operators/merge_upsert.py``) and the
+u-family queries all commit through it — with the same design the public
+lakehouse formats (Delta Lake, Iceberg) use, re-expressed minimally:
 
 - **Commit log**: the table is defined by ``_txlog/{version:08d}.json``
   files; each commit lists parquet files *added* (with per-file key
@@ -26,11 +26,13 @@ lakehouse formats (Delta Lake, Iceberg) use — re-expressed minimally:
   valid). A ``merge``/``delete`` that loses the race re-reads the new
   snapshot and recomputes before retrying, so lost updates are
   impossible by construction.
-- **Stats-pruned copy-on-write MERGE**: each data file records its merge
-  key's min/max; a merge only rewrites files whose key range overlaps
-  the source batch and carries every other file over untouched — at
-  100 TB an upsert of one day's keys touches one day's files, not the
-  table.
+- **Stats-pruned copy-on-write MERGE**: each data file records the
+  min/max of its merge key (the FIRST column of a composite key); a
+  merge only rewrites files whose key range overlaps the source batch
+  and carries every other file over untouched — at 100 TB an upsert of
+  one day's keys touches one day's files, not the table. Timestamp-keyed
+  rewrites are range-clustered into one file per day of key span, so
+  files cover disjoint ranges and the touched set stays one batch wide.
 - **Exactly-once streaming**: commits may carry a ``(app, batch)``
   transaction id; a replayed ``foreachBatch`` (same app, batch ≤ last
   committed) becomes a no-op, which makes the streaming MERGE sink
@@ -38,15 +40,23 @@ lakehouse formats (Delta Lake, Iceberg) use — re-expressed minimally:
 
 Driver-side state is O(commits) tiny JSON plus file names — the data
 plane (rewrites, anti-joins, appends) is all distributed DataFrame work.
+
+Storage scope: the LOG goes through the injectable :class:`CommitStore`
+(POSIX or S3 conditional PUT), but data files are written and listed
+through ``pathlib``, so the table root must be a local/POSIX path
+(a mounted filesystem); ``TxLogTable`` rejects ``scheme://`` roots.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import tempfile
+import threading
 import uuid
+from collections.abc import Sequence
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -298,12 +308,19 @@ class _DataFile:
 # keys → duplicate keys after merge), and date/decimal stats are objects
 # json.dump rejects. Anything else records no stats = never pruned.
 _STATS_SAFE_TYPES = ("int8", "int16", "int32", "int64", "uint8", "uint16", "uint32")
+# Spark timestamps written as INT64 micros (see ``_write_data``): the raw
+# footer value is the exact UTC microsecond, i.e. ``unix_micros(ts)``.
+# Spark's default INT96 encoding carries no statistics at all.
+_TS_MICROS_TYPE = "timestamp[us, tz=UTC]"
+_TS_WRITE_LOCK = threading.Lock()  # guards the process-wide session conf
+_DAY_MICROS = 86_400_000_000
 
 
 def _file_stats(abs_path: str, key_col: str | None) -> tuple[int, int | None, int | None]:
     """(rows, min_key, max_key) from the parquet footer — write-time stats
     collection, the Delta/Iceberg pattern (no data read). Stats are kept
-    only for integral key columns (see ``_STATS_SAFE_TYPES``)."""
+    only for integral key columns (see ``_STATS_SAFE_TYPES``) and for
+    INT64-micros timestamps (as UTC microseconds)."""
     import pyarrow.parquet as pq
 
     f = pq.ParquetFile(abs_path)
@@ -311,16 +328,39 @@ def _file_stats(abs_path: str, key_col: str | None) -> tuple[int, int | None, in
     if key_col is None or key_col not in f.schema_arrow.names:
         return rows, None, None
     idx = f.schema_arrow.get_field_index(key_col)
-    if str(f.schema_arrow.types[idx]) not in _STATS_SAFE_TYPES:
-        return rows, None, None  # non-integral key → no pruning, always rewritten
+    kind = str(f.schema_arrow.types[idx])
+    if kind not in _STATS_SAFE_TYPES and kind != _TS_MICROS_TYPE:
+        return rows, None, None  # no exact stats → no pruning, always rewritten
     lo = hi = None
     for rg in range(f.metadata.num_row_groups):
         st = f.metadata.row_group(rg).column(idx).statistics
         if st is None or not st.has_min_max:
             return rows, None, None  # no stats → never prune this file
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
+        mn, mx = (st.min_raw, st.max_raw) if kind == _TS_MICROS_TYPE else (st.min, st.max)
+        lo = mn if lo is None else min(lo, mn)
+        hi = mx if hi is None else max(hi, mx)
     return rows, lo, hi
+
+
+def _is_ts(df: DataFrame, col: str | None) -> bool:
+    return col is not None and isinstance(df.schema[col].dataType, T.TimestampType)
+
+
+def _local_root(root: str | os.PathLike) -> Path:
+    """The table root as a local path. Data files go through ``pathlib``
+    (``_write_data`` globs the written directory), so a Hadoop URI such
+    as ``s3a://`` cannot host the data — fail at construction, not after
+    a half-run pipeline."""
+    s = str(root)
+    if s.startswith("file:"):
+        s = "/" + s[len("file:"):].lstrip("/")
+    if "://" in s:
+        raise ValueError(
+            f"txlog table root {s!r} is not a local path: TxLogTable writes "
+            "and lists data files through the local filesystem (mount the "
+            "store, or keep the table on a POSIX path)"
+        )
+    return Path(s)
 
 
 class TxLogTable:
@@ -341,7 +381,7 @@ class TxLogTable:
         checkpoint_interval: int | None = 16,
         store: CommitStore | None = None,
     ):
-        self.root = Path(root)
+        self.root = _local_root(root)
         self.log_dir = self.root / "_txlog"
         self.checkpoint_interval = checkpoint_interval
         self.store = store if store is not None else CommitStore()
@@ -381,6 +421,10 @@ class TxLogTable:
     def commits(self, as_of: int | None = None) -> list[dict]:
         last = self.latest_version() if as_of is None else as_of
         return [self._read_commit(v) for v in range(last + 1)]
+
+    def commit_info(self, version: int) -> dict | None:
+        """The ``info`` a merge recorded on ``version`` (None if none)."""
+        return self._read_commit(version).get("info")
 
     def _try_publish(self, payload: dict, version: int) -> bool:
         """Atomically publish ``payload`` as ``version`` through the
@@ -712,7 +756,20 @@ class TxLogTable:
         out = self.root / sub
         if target_files is not None:
             df = df.coalesce(target_files)
-        df.write.mode("errorifexists").parquet(str(out))
+        if _is_ts(df, key_col):
+            # the writer reads this session conf, not a per-write option;
+            # the lock keeps concurrent writers from restoring each other's
+            # value (a file written as INT96 would lose its stats)
+            conf = df.sparkSession.conf
+            with _TS_WRITE_LOCK:
+                prev = conf.get("spark.sql.parquet.outputTimestampType")
+                conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+                try:
+                    df.write.mode("errorifexists").parquet(str(out))
+                finally:
+                    conf.set("spark.sql.parquet.outputTimestampType", prev)
+        else:
+            df.write.mode("errorifexists").parquet(str(out))
         added = []
         for p in sorted(out.glob("*.parquet")):
             rows, lo, hi = _file_stats(str(p), key_col)
@@ -776,28 +833,51 @@ class TxLogTable:
         self,
         spark: SparkSession,
         source: DataFrame,
-        key_col: str,
+        key_col: str | Sequence[str],
         delete: bool = False,
         txn: tuple[str, int] | None = None,
         target_files: int | None = None,
         max_retries: int = 5,
         allow_schema_evolution: bool = False,
         broadcast_key_limit: int = 4_000_000,
+        update_cols: Sequence[str] | None = None,
+        info: dict | None = None,
     ) -> int:
         """Copy-on-write MERGE (upsert; ``delete=True`` → anti-delete by
         key). Only files whose footer key range overlaps the source batch
         are rewritten; the rest carry over by name. A lost commit race
         re-reads the NEW snapshot and recomputes the rewrite, so a
         concurrent writer's rows are never silently resurrected (no lost
-        update). Source must be unique per key."""
+        update). Source must be unique per key.
+
+        ``key_col`` may be composite; file stats (and so pruning) follow
+        its first column. ``update_cols`` is the Postgres ``ON CONFLICT
+        DO UPDATE SET`` list: a matched row takes only these columns from
+        the source and keeps every other column from the target (default:
+        the whole row is replaced). ``info`` is recorded verbatim on the
+        commit (``commits()[v]["info"]``) — caller metadata such as the
+        run's ingest day, without the replay semantics of ``txn``.
+
+        A timestamp first key column is clustered: the rewrite is
+        range-partitioned on it into one file per day of key span
+        (``target_files`` overrides the count), so files cover disjoint
+        ranges and the next overlapping batch touches only its own days."""
+        keys = [key_col] if isinstance(key_col, str) else list(key_col)
+        stats_col = keys[0]
+        if update_cols is not None:
+            bad = set(update_cols) & set(keys)
+            if bad:
+                raise ValueError(f"update_cols may not overlap keys: {sorted(bad)}")
         if txn is not None:
             last = self.last_txn_batch(txn[0])
             if last is not None and txn[1] <= last:
                 return self.latest_version()  # replayed batch → no-op, no work
         src = source.localCheckpoint(eager=True)  # stable across retries
+        clustered = _is_ts(src, stats_col)
+        stat = F.unix_micros(stats_col) if clustered else F.col(stats_col)
         bounds = src.agg(
-            F.min(key_col).alias("lo"),
-            F.max(key_col).alias("hi"),
+            F.min(stat).alias("lo"),
+            F.max(stat).alias("hi"),
             F.count("*").alias("n"),
         ).first()
         if bounds["lo"] is None:
@@ -807,9 +887,14 @@ class TxLogTable:
         # size-based choice and OOMs the executors at large batch sizes —
         # hint only when the (already-counted) batch is verifiably small,
         # otherwise let AQE pick the join strategy
-        src_keys = src.select(key_col)
+        src_keys = src.select(*keys)
         if bounds["n"] <= broadcast_key_limit:
             src_keys = F.broadcast(src_keys)
+        keep = (
+            []
+            if update_cols is None
+            else [c for c in src.columns if c not in keys and c not in update_cols]
+        )
 
         for _ in range(max_retries + 1):
             base = self.latest_version()
@@ -836,12 +921,28 @@ class TxLogTable:
                     ),
                     cur_dvs,
                 )
-                survivors = current.join(src_keys, on=key_col, how="left_anti")
+                survivors = current.join(src_keys, on=keys, how="left_anti")
+                upserts = src
+                if keep and not delete:
+                    # matched rows keep the target's non-update columns
+                    hit = current.select(
+                        *keys,
+                        *[F.col(c).alias(f"__t_{c}") for c in keep],
+                        F.lit(True).alias("__hit"),
+                    )
+                    upserts = src.join(hit, on=keys, how="left").select(
+                        *[
+                            F.when(F.col("__hit"), F.col(f"__t_{c}")).otherwise(F.col(c)).alias(c)
+                            if c in keep
+                            else F.col(c)
+                            for c in src.columns
+                        ]
+                    )
                 rewritten = (
                     survivors
                     if delete
                     else survivors.unionByName(
-                        src, allowMissingColumns=allow_schema_evolution
+                        upserts, allowMissingColumns=allow_schema_evolution
                     )
                 )
             else:
@@ -851,8 +952,16 @@ class TxLogTable:
             )
             if written_schema is not None:
                 self._check_additive_evolution(written_schema)
+            if clustered and rewritten is not None:
+                span = [lo, hi] + [
+                    v for f in touched for v in (f.min_key, f.max_key) if v is not None
+                ]
+                days = math.ceil((max(span) - min(span) + 1) / _DAY_MICROS)
+                rewritten = rewritten.repartitionByRange(
+                    target_files or days, F.col(stats_col)
+                ).sortWithinPartitions(stats_col)
             added = (
-                self._write_data(rewritten, key_col, target_files)
+                self._write_data(rewritten, stats_col, None if clustered else target_files)
                 if rewritten is not None
                 else []
             )
@@ -878,6 +987,7 @@ class TxLogTable:
                 "txn": {"app": txn[0], "batch": txn[1]} if txn else None,
                 "schema": written_schema,
                 "dv_removed": dv_retired,
+                "info": info,
             }
             if txn is not None:
                 last = self.last_txn_batch(txn[0], as_of=base)

@@ -13,6 +13,12 @@ Stage parity map (SURVEY §2.12 / §3):
 - build L2  ↔ `scripts/sql/l2_tables/upsert_l2_for_ds.sql` (window dedup
               latest-load_ds-wins per PK, upsert all non-key cols)
 
+L1 and L2 are :class:`~..operators.txlog.TxLogTable` tables: each load is
+one atomic commit (the reference's one transaction per load), concurrent
+writers recompute instead of losing updates, and every L2 commit records
+its run's ``ds`` so :func:`read_l2_asof` is a plain version read. Raw and
+staging may live on any Hadoop URI; the L1/L2 roots must be local paths.
+
 Orchestration (the reference's Airflow DAG chain, O1–O7) is plain function
 composition: each stage returns the path/count the next one consumes —
 the XCom/TriggerDagRun machinery collapses into return values.
@@ -32,12 +38,14 @@ from dibimbing_case_study_etl_spark.config import PipelineConfig
 from dibimbing_case_study_etl_spark.operators.merge_upsert import merge_upsert
 from dibimbing_case_study_etl_spark.operators.dedup_window import latest_per_key
 from dibimbing_case_study_etl_spark.operators.quality import expect
+from dibimbing_case_study_etl_spark.operators.txlog import TxLogTable
 from dibimbing_case_study_etl_spark.schemas import (
     L1_UPDATE_COLS,
     L2_UPDATE_COLS,
     RAW_OPEN_METEO_SCHEMA,
     WEATHER_COLUMNS,
     WEATHER_PK,
+    WEATHER_SCHEMA,
 )
 
 log = logging.getLogger(__name__)
@@ -143,36 +151,35 @@ def load_staging_to_l1(spark: SparkSession, staging_path: str, l1_path: str) -> 
     reference's sequential execute_values makes the last row win).
     """
     src = spark.read.parquet(staging_path)
-    merge_upsert(
+    version = merge_upsert(
         spark,
-        target_path=l1_path,
+        TxLogTable(l1_path),
         source=src.select(*WEATHER_COLUMNS, "pos"),
-        keys=list(WEATHER_PK),
-        update_cols=list(L1_UPDATE_COLS),
+        keys=WEATHER_PK,
+        update_cols=L1_UPDATE_COLS,
         order_by=[F.desc("load_ds"), F.desc("pos")],
-        partition_col="date",
     )
-    log.info("load_l1: merged %s -> %s", staging_path, l1_path)
+    log.info("load_l1: merged %s -> %s v%d", staging_path, l1_path, version)
 
 
 def build_l2_for_ds(spark: SparkSession, l1_path: str, l2_path: str, ds: str) -> None:
     """L1 → L2 silver build for one ``ds`` (parity:
     `upsert_l2_for_ds.sql:7-33`): restrict to the day's slice (P2), window
     dedup latest-load_ds-wins per PK (W1), upsert updating ALL non-key
-    columns (U2)."""
-    l1 = spark.read.parquet(l1_path).select(*WEATHER_COLUMNS)
+    columns (U2). The commit records ``ds`` for :func:`read_l2_asof`."""
+    l1 = TxLogTable(l1_path).read(spark).select(*WEATHER_COLUMNS)
     day = l1.filter(F.col("load_ds") == F.lit(ds).cast("date"))
     dedup = latest_per_key(day, keys=list(WEATHER_PK), order_by=[F.desc("load_ds")])
-    merge_upsert(
+    version = merge_upsert(
         spark,
-        target_path=l2_path,
+        TxLogTable(l2_path),
         source=dedup,
-        keys=list(WEATHER_PK),
-        update_cols=list(L2_UPDATE_COLS),
+        keys=WEATHER_PK,
+        update_cols=L2_UPDATE_COLS,
         order_by=[F.desc("load_ds")],
-        partition_col="date",
+        info={"ds": ds},
     )
-    log.info("build_l2: merged ds=%s %s -> %s", ds, l1_path, l2_path)
+    log.info("build_l2: merged ds=%s %s -> %s v%d", ds, l1_path, l2_path, version)
 
 
 def run_pipeline(
@@ -186,6 +193,8 @@ def run_pipeline(
     ``payload=None`` fetches from the live API (driver-side, retried);
     tests inject fixture payloads instead.
     """
+    for root in (cfg.storage.l1_path, cfg.storage.l2_path):
+        TxLogTable(root)  # a non-local root raises here, before any stage runs
     if payload is None:
         from dibimbing_case_study_etl_spark.sources.http_api import fetch_open_meteo
 
@@ -201,41 +210,23 @@ def run_pipeline(
 
 
 def read_l2(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    return spark.read.parquet(cfg.storage.l2_path)
+    """The current L2 snapshot."""
+    return TxLogTable(cfg.storage.l2_path).read(spark)
 
 
 def read_l2_asof(spark: SparkSession, cfg: PipelineConfig, as_of_ds: str) -> DataFrame:
-    """Reproduce L2 exactly as it stood after the ``as_of_ds`` run — the
-    snapshot/time-travel read a lakehouse needs for reproducible training
-    runs, without a transactional table format.
+    """L2 exactly as the last run with ``ds <= as_of_ds`` committed it —
+    the snapshot/time-travel read a lakehouse needs for reproducible
+    training runs. A version read: no staging files are touched. Before
+    the first such run the result is empty (with the L2 schema).
 
-    L1/L2 rewrite rows in place, so they cannot answer "as of last
-    Tuesday"; the per-``ds`` staging layer is the append-only history that
-    can. The reconstruction replays the upsert semantics over all staged
-    batches with ``load_ds <= as_of_ds``:
-
-    * ``temperature_c``/``timezone``/``load_ds`` come from the NEWEST
-      batch that touched the PK (L1's update-column subset, last-wins);
-    * ``date``/``hour`` come from the insert — the winner of the EARLIEST
-      batch (they are never updated in L1, and L2 copies them from L1);
-    * within one batch the highest array position wins (the reference's
-      sequential execute_values order), same as ``load_staging_to_l1``.
-
-    Cost is one scan of the staged history ≤ the cutoff + two windows over
-    the same (PK) partitioning — no replay of per-day merges.
+    "Last" is commit order, so after a backfill (an older ``ds`` run
+    after newer ones) the backfill's version, which includes the newer
+    days, is the answer for every cutoff from the backfilled day on.
     """
-    hist = spark.read.parquet(
-        os.path.join(cfg.storage.staging_dir, f"source={SOURCE_NAME}", "ds=*")
-    ).filter(F.col("load_ds") <= F.lit(as_of_ds).cast("date"))
-    newest = latest_per_key(
-        hist, keys=list(WEATHER_PK), order_by=[F.desc("load_ds"), F.desc("pos")]
-    )
-    oldest = latest_per_key(
-        hist, keys=list(WEATHER_PK), order_by=[F.asc("load_ds"), F.desc("pos")]
-    )
-    inserted = oldest.select(*WEATHER_PK, "date", "hour")
-    return (
-        newest.drop("date", "hour", "pos")
-        .join(inserted, list(WEATHER_PK))
-        .select(*WEATHER_COLUMNS)
-    )
+    table = TxLogTable(cfg.storage.l2_path)
+    for v in range(table.latest_version(), -1, -1):
+        ds = (table.commit_info(v) or {}).get("ds")
+        if ds is not None and ds <= as_of_ds:
+            return table.read(spark, as_of=v)
+    return spark.createDataFrame([], WEATHER_SCHEMA)

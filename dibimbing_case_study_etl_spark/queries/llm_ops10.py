@@ -130,7 +130,7 @@ def q79_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint(eager=False)  # consumed by the click join AND n1
+        .localCheckpoint()  # consumed by the click join AND n1 (eager: see c)
     )
     c = (
         e.filter(F.col("event_type") == "click")
@@ -138,7 +138,10 @@ def q79_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("t1").alias("t1"), F.min("ts").alias("t2"))
-        .localCheckpoint(eager=False)  # consumed by the purchase join AND n2/s21
+        # consumed by the purchase join AND the broadcast n2/s21 aggregate;
+        # eager, so the broadcast thread never computes a lazy checkpoint
+        # while the DAG scheduler does (a JVM deadlock seen under load)
+        .localCheckpoint()
     )
     p = (
         e.filter(F.col("event_type") == "purchase")

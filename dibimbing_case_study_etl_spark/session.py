@@ -5,8 +5,9 @@ Defaults are chosen for the 100 TB posture (SURVEY §4.2):
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   broadcast demotion/promotion at runtime).
 - Arrow on (every Pandas-UDF boundary is Arrow-batched, never per-row).
-- Dynamic partition overwrite (the atomicity primitive behind
-  ``merge_upsert`` over plain Parquet — only touched partitions rewrite).
+- Dynamic partition overwrite (the partitioned-Parquet rewrites in
+  ``operators/rollup.py`` and ``operators/maintenance.py`` replace only
+  touched partitions; the L1/L2 upserts commit through ``txlog``).
 - Session timezone pinned to UTC (Spark timestamps are session-TZ;
   the DuckDB oracle and the parquet test data are UTC-naive).
 - Shuffle partitions sized to the local core count rather than the 200

@@ -13,12 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_json(spark: SparkSession, path: str, schema: T.StructType, multi_line: bool = False) -> DataFrame:
-    """JSON source with an explicit schema (the raw-payload read,
-    `normalize:33-43`). ``multi_line=True`` for one-document-per-file."""
-    return spark.read.schema(schema).json(path, multiLine=multi_line)
-
-
 def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
     """Parquet source; optional schema pins column order/types (S8)."""
     reader = spark.read

@@ -52,7 +52,7 @@ def read_jdbc(
 
 def upsert_sql(table: str, columns: Sequence[str], keys: Sequence[str], update_cols: Sequence[str]) -> str:
     """The reference's conflict-update statement (`load:52-61`), with the
-    same split-update semantics merge_upsert implements over Parquet."""
+    same split-update semantics merge_upsert implements over txlog tables."""
     cols = ", ".join(columns)
     placeholders = ", ".join(["%s"] * len(columns))
     conflict = ", ".join(keys)

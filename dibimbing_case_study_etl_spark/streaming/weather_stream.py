@@ -5,9 +5,9 @@ reprocessing (`dag_extract_from_api.py:28`, `README.md:261`). The Spark
 equivalent: a Structured Streaming file source watching the staging
 prefix, ``Trigger.AvailableNow`` (process everything pending, then stop —
 the cron-batch semantics, but with checkpointed exactly-once file
-tracking), and ``foreachBatch`` running the same ``merge_upsert`` the
-batch pipeline uses, so late/duplicate data resolves by the identical
-latest-``load_ds``-wins rule.
+tracking), and ``foreachBatch`` running the same ``merge_upsert`` into the
+same L1 ``TxLogTable`` the batch pipeline uses, so late/duplicate data
+resolves by the identical latest-``load_ds``-wins rule.
 """
 
 from __future__ import annotations
@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dibimbing_case_study_etl_spark.operators.merge_upsert import merge_upsert
+from dibimbing_case_study_etl_spark.operators.txlog import TxLogTable
 from dibimbing_case_study_etl_spark.schemas import L1_UPDATE_COLS, WEATHER_PK, WEATHER_SCHEMA
 
 
@@ -31,6 +32,7 @@ def incremental_l1(
     Exactly-once across restarts: the checkpoint tracks consumed files, and
     merge_upsert is idempotent per batch, so replays converge.
     """
+    table = TxLogTable(l1_path)
     schema = T.StructType(WEATHER_SCHEMA.fields + [T.StructField("pos", T.IntegerType())])
     stream = spark.readStream.schema(schema).parquet(staging_glob)
 
@@ -39,12 +41,11 @@ def incremental_l1(
             return
         merge_upsert(
             batch.sparkSession,
-            target_path=l1_path,
+            table,
             source=batch,
-            keys=list(WEATHER_PK),
-            update_cols=list(L1_UPDATE_COLS),
+            keys=WEATHER_PK,
+            update_cols=L1_UPDATE_COLS,
             order_by=[F.desc("load_ds"), F.desc("pos")],
-            partition_col="date",
         )
 
     q = (

@@ -1,11 +1,10 @@
 """Catalog DDL (SURVEY §2.1 S10): the reference's schema/table bootstrap
 (`load:37-50, 80-86`; `create_l2.sql:7-18`) as Spark catalog tables.
 
-External parquet tables over the warehouse paths let every consumer
-address L1/L2 by name (``spark.table`` / ``spark.sql``) with partition
-pruning on the Hive layout. Secondary B-tree indexes (`create_l2.sql:20-21`)
-have no Spark equivalent and need none: partition pruning + parquet
-min/max stats serve the same reads.
+Views over the L1/L2 snapshot reads let every consumer address them by
+name (``spark.table`` / ``spark.sql``). Secondary B-tree indexes
+(`create_l2.sql:20-21`) have no Spark equivalent and need none: the
+txlog's per-file ``ts`` stats and parquet min/max serve the same reads.
 """
 
 from __future__ import annotations
@@ -13,32 +12,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from dibimbing_case_study_etl_spark.config import PipelineConfig
-
-
-def create_external_table(
-    spark: SparkSession,
-    name: str,
-    location: str,
-    partitioned_by: tuple[str, ...] = ("date",),
-) -> None:
-    """Idempotent CREATE TABLE IF NOT EXISTS over an existing parquet
-    layout, then partition discovery (MSCK) so pruning works immediately."""
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {name} USING PARQUET LOCATION '{location}'"
-    )
-    if partitioned_by:
-        try:
-            spark.sql(f"MSCK REPAIR TABLE {name}")
-        except Exception:
-            # non-partitioned layout registered with partition spec absent —
-            # discovery is a no-op for flat tables
-            pass
+from dibimbing_case_study_etl_spark.operators.txlog import TxLogTable
 
 
 def register_warehouse(spark: SparkSession, cfg: PipelineConfig) -> None:
-    """Register the medallion outputs under the reference's table names."""
-    create_external_table(spark, "l1_weather_hourly", cfg.storage.l1_path)
-    create_external_table(spark, "l2_weather_hourly", cfg.storage.l2_path)
+    """Register the medallion outputs under the reference's table names,
+    as session views over each table's current snapshot. A Parquet table
+    over the root would also read the files later commits replaced (live
+    rows twice); re-register after a run to see its commit."""
+    for name, root in (
+        ("l1_weather_hourly", cfg.storage.l1_path),
+        ("l2_weather_hourly", cfg.storage.l2_path),
+    ):
+        TxLogTable(root).read(spark).createOrReplaceTempView(name)
 
 
 def table(spark: SparkSession, name: str) -> DataFrame:

@@ -45,7 +45,7 @@ def _psycopg2():
 def test_postgres_upsert_round_trip(spark):
     """write_jdbc_upsert twice against a real server: insert then update,
     with in-batch duplicate arbitration — the exact semantics
-    merge_upsert implements over Parquet (reference load:124-149)."""
+    merge_upsert implements over txlog tables (reference load:124-149)."""
     import psycopg2
 
     from dibimbing_case_study_etl_spark.sources.jdbc import write_jdbc_upsert

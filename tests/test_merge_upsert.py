@@ -1,5 +1,6 @@
-"""merge_upsert unit tests: update-column split (U1 vs U2 semantics),
-in-batch arbitration, partition preservation, idempotency."""
+"""merge_upsert unit tests on the txlog path: update-column split (U1 vs
+U2 semantics), in-batch arbitration, untouched-file preservation,
+idempotency."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dibimbing_case_study_etl_spark.operators.merge_upsert import merge_upsert
+from dibimbing_case_study_etl_spark.operators.txlog import TxLogTable
 
 SCHEMA = "k int, date date, hour int, val double, load_ds date, seq int"
 
@@ -21,56 +23,66 @@ D = dt.date
 
 
 @pytest.fixture()
-def target_path(tmp_path):
-    return str(tmp_path / "target")
+def table(tmp_path):
+    return TxLogTable.create(tmp_path / "target")
 
 
-def seed(spark, target_path):
-    base = df_of(
-        spark,
-        [
-            (1, D(2025, 1, 1), 0, 10.0, D(2025, 1, 1), 0),
-            (2, D(2025, 1, 1), 1, 20.0, D(2025, 1, 1), 0),
-            (3, D(2025, 1, 2), 2, 30.0, D(2025, 1, 1), 0),
-        ],
+def seed(spark, table):
+    """Two files: keys {1, 2} and key {3}, with disjoint key ranges."""
+    table.append(
+        df_of(
+            spark,
+            [
+                (1, D(2025, 1, 1), 0, 10.0, D(2025, 1, 1), 0),
+                (2, D(2025, 1, 1), 1, 20.0, D(2025, 1, 1), 0),
+            ],
+        ),
+        key_col="k",
+        target_files=1,
     )
-    base.write.mode("overwrite").partitionBy("date").parquet(target_path)
+    table.append(
+        df_of(spark, [(3, D(2025, 1, 2), 2, 30.0, D(2025, 1, 1), 0)]),
+        key_col="k",
+        target_files=1,
+    )
 
 
-def test_update_col_split(spark, target_path):
+def upsert(spark, table, src, order_by=("load_ds",), update_cols=("val", "load_ds")):
+    """Newest first: every ``order_by`` column descending."""
+    return merge_upsert(
+        spark, table, src, keys=["k"], update_cols=update_cols,
+        order_by=[F.desc(c) for c in order_by],
+    )
+
+
+def test_update_col_split(spark, table):
     """Only update_cols take source values on match; other columns keep
     the target's (the L1 vs L2 distinction, SURVEY §2.6)."""
-    seed(spark, target_path)
-    src = df_of(spark, [(1, D(2025, 1, 1), 99, 11.5, D(2025, 1, 2), 0)])
-    merge_upsert(
-        spark, target_path, src,
-        keys=["k"], update_cols=["val", "load_ds"],
-        order_by=[F.desc("load_ds")], partition_col="date",
-    )
-    out = {r.k: r for r in spark.read.parquet(target_path).collect()}
+    seed(spark, table)
+    upsert(spark, table, df_of(spark, [(1, D(2025, 1, 1), 99, 11.5, D(2025, 1, 2), 0)]))
+    out = {r.k: r for r in table.read(spark).collect()}
     assert out[1].val == 11.5 and out[1].load_ds == D(2025, 1, 2)
     assert out[1].hour == 0  # NOT updated (source said 99)
     assert out[2].val == 20.0 and out[3].val == 30.0  # untouched
 
 
-def test_insert_new_keys_and_preserve_other_partitions(spark, target_path):
-    seed(spark, target_path)
-    src = df_of(spark, [(4, D(2025, 1, 1), 3, 40.0, D(2025, 1, 2), 0)])
-    merge_upsert(
-        spark, target_path, src,
-        keys=["k"], update_cols=["val", "load_ds"],
-        order_by=[F.desc("load_ds")], partition_col="date",
-    )
-    out = spark.read.parquet(target_path)
+def test_insert_new_keys_and_preserve_other_partitions(spark, table):
+    """A pure insert whose key range overlaps no file rewrites nothing:
+    every seeded file is carried over by name."""
+    seed(spark, table)
+    seeded = {f.path for f in table.live_files()}
+    upsert(spark, table, df_of(spark, [(4, D(2025, 1, 1), 3, 40.0, D(2025, 1, 2), 0)]))
+    out = table.read(spark)
     assert out.count() == 4
-    # k=3 lives in partition 2025-01-02, untouched by this merge
     assert out.filter("k = 3").first().val == 30.0
+    assert seeded <= {f.path for f in table.live_files()}
+    assert table.commits()[-1]["removed"] == []
 
 
-def test_in_batch_duplicate_arbitration(spark, target_path):
+def test_in_batch_duplicate_arbitration(spark, table):
     """Duplicate keys within one source batch: first row under order_by
     wins (here: highest seq — 'last in batch order', `load:140-147`)."""
-    seed(spark, target_path)
+    seed(spark, table)
     src = df_of(
         spark,
         [
@@ -78,187 +90,23 @@ def test_in_batch_duplicate_arbitration(spark, target_path):
             (1, D(2025, 1, 1), 0, 222.0, D(2025, 1, 2), 1),
         ],
     )
-    merge_upsert(
-        spark, target_path, src,
-        keys=["k"], update_cols=["val", "load_ds"],
-        order_by=[F.desc("load_ds"), F.desc("seq")], partition_col="date",
-    )
-    assert spark.read.parquet(target_path).filter("k = 1").first().val == 222.0
+    upsert(spark, table, src, order_by=("load_ds", "seq"))
+    assert table.read(spark).filter("k = 1").first().val == 222.0
 
 
-def test_rerun_converges(spark, target_path):
-    seed(spark, target_path)
+def test_rerun_converges(spark, table):
+    seed(spark, table)
     src = df_of(spark, [(2, D(2025, 1, 1), 1, 21.0, D(2025, 1, 3), 0)])
-    for _ in range(2):
-        merge_upsert(
-            spark, target_path, src,
-            keys=["k"], update_cols=["val", "load_ds"],
-            order_by=[F.desc("load_ds")], partition_col="date",
-        )
-    out = spark.read.parquet(target_path)
+    v1 = upsert(spark, table, src)
+    v2 = upsert(spark, table, src)
+    assert v2 == v1 + 1  # a rerun commits again; it is not skipped
+    out = table.read(spark)
     assert out.count() == 3
     assert out.filter("k = 2").first().val == 21.0
 
 
-def test_update_cols_overlapping_keys_rejected(spark, target_path):
-    seed(spark, target_path)
+def test_update_cols_overlapping_keys_rejected(spark, table):
+    seed(spark, table)
     src = df_of(spark, [(1, D(2025, 1, 1), 0, 1.0, D(2025, 1, 1), 0)])
     with pytest.raises(ValueError, match="overlap"):
-        merge_upsert(
-            spark, target_path, src,
-            keys=["k"], update_cols=["k", "val"],
-            order_by=[F.desc("load_ds")],
-        )
-
-
-def test_writer_lock_excludes_concurrent_merges(spark, target_path, tmp_path):
-    """Single-writer contract: a held lock makes a second merge raise
-    ConcurrentWriterError instead of silently interleaving partition
-    overwrites; the lock is released after success and reclaimed when
-    stale (crash orphan)."""
-    import os
-    import time
-
-    import pytest
-
-    from dibimbing_case_study_etl_spark.operators.merge_upsert import (
-        ConcurrentWriterError,
-        merge_upsert,
-        writer_lock,
-    )
-
-    path = str(tmp_path / "locked_tbl")
-    src = spark.createDataFrame(
-        [(1, "d1", 1.0)], "k int, date string, val double"
-    )
-
-    with writer_lock(path):
-        with pytest.raises(ConcurrentWriterError, match="serialize"):
-            merge_upsert(
-                spark, path, src, keys=["k"], update_cols=["val"],
-                order_by=["val"], partition_col="date",
-            )
-    # lock released → merge proceeds, and releases its own lease after
-    merge_upsert(
-        spark, path, src, keys=["k"], update_cols=["val"],
-        order_by=["val"], partition_col="date",
-    )
-    assert not os.path.exists(path + ".__writer_lease")
-    assert spark.read.parquet(path).count() == 1
-
-    # a crash-orphaned lease whose heartbeat is older than stale_sec is
-    # stolen (with a bumped fencing token), and the merge proceeds
-    import json
-
-    lease_file = path + ".__writer_lease"
-    json.dump(
-        {"owner": "pid:dead", "token": 1, "heartbeat": time.time() - 7200},
-        open(lease_file, "w"),
-    )
-    merge_upsert(
-        spark, path, src, keys=["k"], update_cols=["val"],
-        order_by=["val"], partition_col="date",
-    )
-    assert not os.path.exists(lease_file)
-
-
-def test_lease_fencing_token_stops_zombie_writer(tmp_path):
-    """The multi-driver safety property: writer A stalls past its TTL,
-    writer B steals the lease with a strictly higher fencing token, and
-    A's pre-commit check() aborts instead of clobbering B's writes. This
-    is what the r4 single-host advisory lock could not do."""
-    import time
-
-    import pytest
-
-    from dibimbing_case_study_etl_spark.operators.merge_upsert import (
-        ConcurrentWriterError,
-        WriterLease,
-    )
-
-    path = str(tmp_path / "tbl")
-    a = WriterLease(path, ttl_sec=0.2, owner="driver-a").acquire()
-    a.check()  # still valid while fresh
-
-    # a LIVE lease excludes other drivers outright
-    with pytest.raises(ConcurrentWriterError, match="held"):
-        WriterLease(path, ttl_sec=0.2, owner="driver-b").acquire()
-
-    time.sleep(0.3)  # A stalls past its TTL
-    b = WriterLease(path, ttl_sec=60, owner="driver-b").acquire()
-    assert b.token > a.token  # fencing token is monotonic across steals
-
-    with pytest.raises(ConcurrentWriterError, match="stolen"):
-        a.check()  # the zombie writer must abort at the fencing point
-    b.check()  # the new owner is unaffected
-    a.release()  # zombie release is a no-op against the thief's lease
-    b.check()
-    b.release()
-
-
-def test_lease_heartbeat_keeps_short_ttl_alive(tmp_path):
-    """heartbeat() extends a lease across a merge longer than its TTL —
-    the long-stage pattern — while still excluding other drivers."""
-    import time
-
-    import pytest
-
-    from dibimbing_case_study_etl_spark.operators.merge_upsert import (
-        ConcurrentWriterError,
-        WriterLease,
-    )
-
-    path = str(tmp_path / "tbl")
-    a = WriterLease(path, ttl_sec=0.4, owner="driver-a").acquire()
-    for _ in range(3):
-        time.sleep(0.2)
-        a.heartbeat()
-    # 0.6s elapsed > ttl, but the heartbeats kept it live
-    with pytest.raises(ConcurrentWriterError, match="held"):
-        WriterLease(path, ttl_sec=0.4, owner="driver-b").acquire()
-    a.release()
-
-
-def test_merge_aborts_unchanged_when_another_driver_holds_lease(
-    spark, target_path, tmp_path
-):
-    """Reader consistency under contention: when another driver holds the
-    lease, the refused merge leaves the target BYTE-IDENTICAL — readers
-    keep a consistent pre-merge snapshot, nothing half-written."""
-    import os
-
-    import pytest
-
-    from dibimbing_case_study_etl_spark.operators.merge_upsert import (
-        ConcurrentWriterError,
-        WriterLease,
-        merge_upsert,
-    )
-
-    path = str(tmp_path / "tbl")
-    src = spark.createDataFrame([(1, "d1", 1.0)], "k int, date string, val double")
-    merge_upsert(
-        spark, path, src, keys=["k"], update_cols=["val"],
-        order_by=["val"], partition_col="date",
-    )
-
-    def snapshot(p):
-        return {
-            os.path.join(r, f): os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(p)
-            for f in fs
-        }
-
-    before = snapshot(path)
-    other = WriterLease(path, ttl_sec=60, owner="other-driver").acquire()
-    try:
-        upd = spark.createDataFrame([(1, "d1", 9.0)], "k int, date string, val double")
-        with pytest.raises(ConcurrentWriterError):
-            merge_upsert(
-                spark, path, upd, keys=["k"], update_cols=["val"],
-                order_by=["val"], partition_col="date",
-            )
-    finally:
-        other.release()
-    assert snapshot(path) == before
-    assert spark.read.parquet(path).first().val == 1.0
+        upsert(spark, table, src, update_cols=("k", "val"))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from dibimbing_case_study_etl_spark.operators.dedup_window import latest_per_key
 from dibimbing_case_study_etl_spark.operators.merge_upsert import merge_upsert
+from dibimbing_case_study_etl_spark.operators.txlog import TxLogTable
 
 _SLOW = settings(
     max_examples=5,
@@ -38,24 +39,21 @@ batches_strategy = st.lists(st.lists(merge_row, min_size=1, max_size=6), min_siz
 def test_merge_upsert_matches_sequential_model(spark, tmp_path_factory, batches):
     """After merging any batch sequence, the table equals the naive model:
     per key, the (load_ds, seq)-max row wins within each batch, upserted
-    sequentially. The partition column is key-derived (merge_upsert's
-    contract — in the pipeline, date derives from ts which is in the PK);
-    an earlier version of this test partitioned by the mutable load_ds and
-    the property caught the resulting split-brain rows."""
-    target = str(tmp_path_factory.mktemp("prop") / "t")
+    sequentially — ``val``/``load_ds`` from the newest batch, ``first_ds``
+    (not an update column) from the batch that inserted the key."""
+    table = TxLogTable.create(tmp_path_factory.mktemp("prop") / "t")
 
     model: dict[int, tuple] = {}
     for batch in batches:
         rows = [
-            (k, dt.date(2025, 1, k + 1), dt.date(2025, 1, d), float(v), seq)
+            (k, dt.date(2025, 1, d), dt.date(2025, 1, d), float(v), seq)
             for seq, (k, d, v) in enumerate(batch)
         ]
-        df = spark.createDataFrame(rows, "k int, date date, load_ds date, val double, seq int")
+        df = spark.createDataFrame(rows, "k int, first_ds date, load_ds date, val double, seq int")
         merge_upsert(
-            spark, target, df,
+            spark, table, df,
             keys=["k"], update_cols=["val", "load_ds"],
             order_by=[F.desc("load_ds"), F.desc("seq")],
-            partition_col="date",
         )
         # model replay: winner per key inside the batch, then upsert
         best: dict[int, tuple] = {}
@@ -64,12 +62,11 @@ def test_merge_upsert_matches_sequential_model(spark, tmp_path_factory, batches)
             if cur is None or (d, seq) > (cur[0], cur[2]):
                 best[k] = (d, v, seq)
         for k, (d, v, _) in best.items():
-            model[k] = (d, v)
+            model[k] = (model[k][0] if k in model else d, d, v)
 
-    table = spark.read.parquet(target).collect()
-    assert len(table) == len(model)  # PK uniqueness
-    got = {r.k: (r.load_ds, r.val) for r in table}
-    assert got == model
+    got = table.read(spark).collect()
+    assert len(got) == len(model)  # PK uniqueness
+    assert {r.k: (r.first_ds, r.load_ds, r.val) for r in got} == model
 
 
 @_SLOW

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dibimbing_case_study_etl_spark.config import PipelineConfig, StorageConfig
-from dibimbing_case_study_etl_spark.pipeline.weather import run_pipeline
+from dibimbing_case_study_etl_spark.pipeline.weather import read_l2, run_pipeline
 from dibimbing_case_study_etl_spark.schemas import WEATHER_SCHEMA
 from dibimbing_case_study_etl_spark.sources.files import (
     read_csv,
@@ -21,7 +21,7 @@ from tests.test_weather_pipeline import payload
 def _l2_df(spark, tmp_path):
     cfg = PipelineConfig(storage=StorageConfig(base_dir=str(tmp_path)))
     run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(24))
-    return cfg, spark.read.parquet(cfg.storage.l2_path).select(*[f.name for f in WEATHER_SCHEMA.fields])
+    return cfg, read_l2(spark, cfg).select(*[f.name for f in WEATHER_SCHEMA.fields])
 
 
 def test_format_round_trips(spark, tmp_path):
@@ -62,8 +62,25 @@ def test_warehouse_catalog_tables(spark, tmp_path):
     ).first()
     assert out.n == 24
     assert spark.table("l1_weather_hourly").count() == 24
-    spark.sql("DROP TABLE l1_weather_hourly")
-    spark.sql("DROP TABLE l2_weather_hourly")
+    spark.catalog.dropTempView("l1_weather_hourly")
+    spark.catalog.dropTempView("l2_weather_hourly")
+
+
+def test_warehouse_views_return_each_key_once(spark, tmp_path):
+    """Over a two-day history the second day replaced files the first
+    wrote; the registered names still return each primary key once."""
+    cfg = PipelineConfig(storage=StorageConfig(base_dir=str(tmp_path)))
+    run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(24, temps=[1.0] * 24))
+    run_pipeline(spark, cfg, ds="2025-10-17", payload=payload(24, temps=[2.0] * 24))
+    register_warehouse(spark, cfg)
+    try:
+        for name in ("l1_weather_hourly", "l2_weather_hourly"):
+            t = spark.table(name)
+            assert t.count() == t.select("ts", "latitude", "longitude", "source").distinct().count() == 24
+            assert {r.temperature_c for r in t.collect()} == {2.0}
+    finally:
+        spark.catalog.dropTempView("l1_weather_hourly")
+        spark.catalog.dropTempView("l2_weather_hourly")
 
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir):

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from dibimbing_case_study_etl_spark.catalog import load_table
 from dibimbing_case_study_etl_spark.config import PipelineConfig, StorageConfig
+from dibimbing_case_study_etl_spark.operators.txlog import TxLogTable
 from dibimbing_case_study_etl_spark.pipeline.weather import (
     extract_to_raw,
     normalize_to_staging,
@@ -36,18 +37,18 @@ def test_incremental_l1_exactly_once(spark, tmp_path):
 
     _stage_day(spark, cfg, "2025-10-16")
     _stage_day(spark, cfg, "2025-10-17")
+    l1 = TxLogTable(cfg.storage.l1_path)
     incremental_l1(spark, glob, cfg.storage.l1_path, ckpt)
-    l1 = spark.read.parquet(cfg.storage.l1_path)
-    assert l1.count() == 48
+    assert l1.read(spark).count() == 48
 
     # re-run with no new files: checkpoint skips everything, L1 unchanged
     incremental_l1(spark, glob, cfg.storage.l1_path, ckpt)
-    assert spark.read.parquet(cfg.storage.l1_path).count() == 48
+    assert l1.read(spark).count() == 48
 
     # a third day arrives: only the new file merges
     _stage_day(spark, cfg, "2025-10-18")
     incremental_l1(spark, glob, cfg.storage.l1_path, ckpt)
-    out = spark.read.parquet(cfg.storage.l1_path)
+    out = l1.read(spark)
     assert out.count() == 72
     assert out.select("load_ds").distinct().count() == 3
 

@@ -136,6 +136,9 @@ def test_merge_gives_up_after_max_retries(spark, table):
         TxLogTable.merge(
             table, spark, _rows(spark, [(1, "x")]), "k", target_files=1, max_retries=1
         )
+    # the refused merge published nothing: readers keep the prior version
+    assert table.latest_version() == 0
+    assert _state(table, spark) == {1: "a"}
 
 
 def test_txn_batch_replay_is_idempotent(spark, table):
@@ -988,3 +991,69 @@ def test_append_retry_revalidates_schema_evolution(spark, table):
     # the winner's column survives; the loser published nothing
     assert set(table.read(spark).columns) == {"k", "v", "w"}
     assert _state(table, spark) == {1: "a", 2: "b"}
+
+
+def test_timestamp_key_stats_cluster_rewrites_by_day(spark, tmp_path):
+    """A composite key led by a timestamp records exact UTC-microsecond
+    file stats, a rewrite lands one file per day of key span with
+    disjoint ranges, and an overlapping batch rewrites only files that
+    reach into its own range — earlier days are carried over by name."""
+    t = TxLogTable.create(tmp_path / "t")
+    day_us = 86_400_000_000
+    t0 = 1_735_689_600_000_000  # 2025-01-01T00:00Z
+
+    def hours(start, n, val):
+        return spark.range(n).select(
+            F.timestamp_micros(F.lit(t0) + (F.col("id") + start) * 3_600_000_000).alias("ts"),
+            F.lit("a").alias("loc"),
+            F.lit(val).alias("val"),
+            F.lit(0).alias("first"),
+        )
+
+    t.merge(spark, hours(0, 96, 1.0), ["ts", "loc"])
+    files = sorted(t.live_files(), key=lambda f: f.min_key)
+    assert len(files) == 4
+    assert files[0].min_key == t0 and files[-1].max_key == t0 + 95 * 3_600_000_000
+    assert all(a.max_key < b.min_key for a, b in zip(files, files[1:]))
+
+    lo = t0 + 3 * day_us
+    t.merge(
+        spark,
+        hours(72, 48, 2.0).withColumn("first", F.lit(1)),
+        ["ts", "loc"],
+        update_cols=["val"],
+    )
+    removed = set(t.commits()[-1]["removed"])
+    assert removed == {f.path for f in files if f.max_key >= lo}
+    assert len(removed) < len(files)
+    rows = t.read(spark).collect()
+    assert len(rows) == 120
+    cut = [(r.val, r.first) for r in rows if r.ts.day == 4]  # hours 72..95
+    assert set(cut) == {(2.0, 0)}  # updated val, kept first
+    live = sorted(t.live_files(), key=lambda f: f.min_key)
+    assert all(a.max_key < b.min_key for a, b in zip(live, live[1:]))
+
+
+def test_concurrent_timestamp_writes_keep_stats_and_conf(spark, tmp_path):
+    """Timestamp-keyed writes switch a process-wide session conf to get
+    INT64 timestamps (and so footer stats). Eight threads writing at once
+    must each get stats on every file, and leave the conf as it was."""
+    before = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    df = spark.range(48).select(
+        F.timestamp_micros(F.col("id") * 3_600_000_000).alias("ts"), F.col("id").alias("v")
+    )
+    tables = [TxLogTable.create(tmp_path / f"t{i}") for i in range(8)]
+    errs: list[Exception] = []
+
+    def worker(t):
+        try:
+            t.merge(spark, df, ["ts"])
+        except Exception as e:  # pragma: no cover - failure reporting
+            errs.append(e)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in tables]
+    [t.start() for t in threads]
+    [t.join(timeout=300) for t in threads]
+    assert not any(t.is_alive() for t in threads) and not errs
+    assert all(f.min_key is not None for t in tables for f in t.live_files())
+    assert spark.conf.get("spark.sql.parquet.outputTimestampType") == before

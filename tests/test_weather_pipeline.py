@@ -5,13 +5,17 @@ payload edge cases, idempotency, latest-wins, in-batch dupes, multi-location.
 from __future__ import annotations
 
 import datetime as dt
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from dibimbing_case_study_etl_spark.config import PipelineConfig, StorageConfig
 from dibimbing_case_study_etl_spark.operators.quality import DataQualityError
-from dibimbing_case_study_etl_spark.pipeline.weather import run_pipeline, read_l2
+from dibimbing_case_study_etl_spark.operators.txlog import CommitStore, TxLogTable
+from dibimbing_case_study_etl_spark.pipeline import weather
+from dibimbing_case_study_etl_spark.pipeline.weather import read_l2, read_l2_asof, run_pipeline
+from dibimbing_case_study_etl_spark.schemas import WEATHER_COLUMNS
 
 
 def payload(
@@ -38,6 +42,10 @@ def payload(
 @pytest.fixture()
 def cfg(tmp_path):
     return PipelineConfig(storage=StorageConfig(base_dir=str(tmp_path)))
+
+
+def _snap(df):
+    return sorted(tuple(r) for r in df.select(*WEATHER_COLUMNS).collect())
 
 
 def test_happy_path_end_to_end(spark, cfg):
@@ -173,27 +181,119 @@ def test_read_l2_asof_reproduces_historical_snapshot(spark, cfg):
     hours with drifting temperatures, read_l2_asof(day2) must equal the
     L2 table captured right after day 2's run — byte-for-byte row
     equality — and as-of the final day must equal the live table."""
-    from dibimbing_case_study_etl_spark.pipeline.weather import read_l2_asof
-
     def day(ds, base):
         return payload(n_hours=6, start="2025-10-16T00:00", temps=[base + i for i in range(6)])
 
-    def snap(df):
-        from dibimbing_case_study_etl_spark.schemas import WEATHER_COLUMNS
-
-        # partitioned parquet reads append the partition column last;
-        # normalize to the canonical column order before comparing
-        return sorted(tuple(r) for r in df.select(*WEATHER_COLUMNS).collect())
-
     run_pipeline(spark, cfg, ds="2025-10-16", payload=day("2025-10-16", 10.0))
     run_pipeline(spark, cfg, ds="2025-10-17", payload=day("2025-10-17", 20.0))
-    snapshot_d2 = snap(read_l2(spark, cfg))
+    snapshot_d2 = _snap(read_l2(spark, cfg))
     run_pipeline(spark, cfg, ds="2025-10-18", payload=day("2025-10-18", 30.0))
 
     # live table moved on (temps now 30-range)...
-    live = snap(read_l2(spark, cfg))
+    live = _snap(read_l2(spark, cfg))
     assert live != snapshot_d2
     # ...but the as-of read reconstructs day 2 exactly
-    assert snap(read_l2_asof(spark, cfg, "2025-10-17")) == snapshot_d2
+    assert _snap(read_l2_asof(spark, cfg, "2025-10-17")) == snapshot_d2
     # and as-of the newest day equals the live table
-    assert snap(read_l2_asof(spark, cfg, "2025-10-18")) == live
+    assert _snap(read_l2_asof(spark, cfg, "2025-10-18")) == live
+
+
+def test_read_l2_asof_before_first_run_is_empty(spark, cfg):
+    before = read_l2_asof(spark, cfg, "2025-10-16")  # no L2 table yet
+    assert before.columns == list(WEATHER_COLUMNS) and before.count() == 0
+    run_pipeline(spark, cfg, ds="2025-10-17", payload=payload(4))
+    earlier = read_l2_asof(spark, cfg, "2025-10-16")  # cutoff before the first run
+    assert earlier.columns == list(WEATHER_COLUMNS) and earlier.count() == 0
+
+
+def test_read_l2_asof_reads_no_staging(spark, cfg):
+    """The as-of read is a version read of L2: its plan scans only L2
+    files, and it still answers after the staging history is gone."""
+    run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(6, temps=[1.0] * 6))
+    day1 = _snap(read_l2(spark, cfg))
+    run_pipeline(spark, cfg, ds="2025-10-17", payload=payload(6, temps=[2.0] * 6))
+    asof = read_l2_asof(spark, cfg, "2025-10-16")
+    assert asof.inputFiles() and all(cfg.storage.l2_path in f for f in asof.inputFiles())
+    shutil.rmtree(cfg.storage.staging_dir)
+    assert _snap(read_l2_asof(spark, cfg, "2025-10-16")) == day1
+
+
+def test_crash_between_l1_and_l2_commits(spark, cfg, tmp_path, monkeypatch):
+    """Day 2 commits L1, then dies while publishing L2 (its data files
+    already written). The previous L2 version stays the readable one, and
+    rerunning day 2 gives the same L2 as an uninterrupted run."""
+    day1 = payload(6, temps=[1.0 + i for i in range(6)])
+    day2 = payload(6, start="2025-10-16T03:00", temps=[9.0 + i for i in range(6)])
+    run_pipeline(spark, cfg, ds="2025-10-16", payload=day1)
+    l1, l2 = TxLogTable(cfg.storage.l1_path), TxLogTable(cfg.storage.l2_path)
+    l2_before, l2_version = _snap(read_l2(spark, cfg)), l2.latest_version()
+
+    publish = CommitStore.put_if_absent
+
+    def crash_on_l2(self, target, data):
+        if str(target).startswith(cfg.storage.l2_path):
+            raise RuntimeError("process died before the L2 commit")
+        return publish(self, target, data)
+
+    monkeypatch.setattr(CommitStore, "put_if_absent", crash_on_l2)
+    with pytest.raises(RuntimeError, match="L2 commit"):
+        run_pipeline(spark, cfg, ds="2025-10-17", payload=day2)
+    monkeypatch.undo()
+
+    assert l1.read(spark).count() == 9  # L1 committed day 2
+    assert l2.latest_version() == l2_version
+    assert _snap(read_l2(spark, cfg)) == l2_before
+
+    run_pipeline(spark, cfg, ds="2025-10-17", payload=day2)
+    clean = PipelineConfig(storage=StorageConfig(base_dir=str(tmp_path / "clean")))
+    run_pipeline(spark, clean, ds="2025-10-16", payload=day1)
+    run_pipeline(spark, clean, ds="2025-10-17", payload=day2)
+    assert _snap(read_l2(spark, cfg)) == _snap(read_l2(spark, clean))
+
+
+def test_racing_l1_merges_lose_no_update(spark, cfg, tmp_path, monkeypatch):
+    """Two L1 loads of the same hours for two locations start from the
+    same snapshot and rewrite the same file; an injected CommitStore lets
+    the second one commit first. The loser recomputes on the winner's
+    version, so both updates land."""
+    run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(4, temps=[0.0] * 4))
+    run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(4, lat=-7.8, lon=110.4, temps=[0.0] * 4))
+
+    def stage(name, **loc):
+        raw = weather.extract_to_raw(payload(4, temps=[7.0] * 4, **loc), str(tmp_path / name), "2025-10-17")
+        return weather.normalize_to_staging(spark, raw, str(tmp_path / f"{name}_staging"), "2025-10-17")
+
+    jakarta = stage("jakarta")
+    yogyakarta = stage("yogyakarta", lat=-7.8, lon=110.4)
+
+    class CompetingStore(CommitStore):
+        compete = True
+
+        def put_if_absent(self, target, data):
+            if self.compete:
+                self.compete = False
+                weather.load_staging_to_l1(spark, yogyakarta, cfg.storage.l1_path)
+            return super().put_if_absent(target, data)
+
+    store = CompetingStore()
+    monkeypatch.setattr(weather, "TxLogTable", lambda root: TxLogTable(root, store=store))
+    weather.load_staging_to_l1(spark, jakarta, cfg.storage.l1_path)
+    monkeypatch.undo()
+
+    l1 = TxLogTable(cfg.storage.l1_path)
+    merges = [c for c in l1.commits() if c["op"] == "merge"]
+    assert len(merges) == 4  # two seed loads, the race winner, the retried loser
+    rows = l1.read(spark).collect()
+    assert len(rows) == 8
+    assert {r.temperature_c for r in rows} == {7.0}
+    assert {r.load_ds for r in rows} == {dt.date(2025, 10, 17)}
+    assert len(l1.live_files()) == 1  # both loads rewrote the one shared file
+
+
+def test_non_local_table_root_fails_before_any_stage(spark, tmp_path):
+    cfg = PipelineConfig(
+        storage=StorageConfig(base_dir=str(tmp_path), l2_path="s3a://bucket/l2_weather_hourly")
+    )
+    with pytest.raises(ValueError, match="not a local path"):
+        run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(4))
+    assert not (tmp_path / "raw").exists()
