@@ -5,6 +5,7 @@ re-expressed Spark-first.
 Layout
 ------
 - ``session``    : SparkSession factory (AQE, Arrow, dynamic partition overwrite).
+- ``pyworker``   : Python worker daemon for local masters (keeps Spark's archive caches).
 - ``schemas``    : single StructType registry (SURVEY §1.2 — the reference declares
                    its schema three times; here it lives once).
 - ``catalog``    : test-table loader/registrar for the TPC-H-ish synthetic data.
