@@ -5,6 +5,24 @@ and register them as temp views so both the DataFrame builders and
 Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings — one parquet file each under
 ``/root/testdata/sf{0.001,0.01,0.1}/``.
+
+Schema reuse. ``spark.read.parquet(path)`` without a schema runs one
+Spark job (Parquet footer inference) each time it is called, so every
+query build used to pay one job per table it reads. ``load_table`` keeps
+the ``StructType`` Spark inferred the first time and reads later builds
+with ``spark.read.schema(s).parquet(path)``, which runs none.
+
+- Only metadata is reused: every build still lists and reads the files.
+- The entry is keyed by the absolute path and the session confs that
+  change what inference returns (``_INFERENCE_CONFS``, among them
+  ``spark.sql.legacy.parquet.nanosAsLong``, which the ``events`` probe
+  sets). It is stamped with the file identity: size and ``st_mtime_ns``
+  of the file, or of every file under a directory.
+- The schema is inferred again when that stamp changes (the file was
+  rewritten), when an inference conf differs, and for paths that are not
+  local (``scheme://`` URIs), which are never cached.
+- There is one entry per (path, conf values), so the cache is bounded by
+  the tables read, not by the number of builds or sessions.
 """
 
 from __future__ import annotations
@@ -13,6 +31,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -30,8 +49,56 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Session confs that change the schema Parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+# (abspath, conf values) -> (file stamp, inferred schema). Racing loads of
+# one table at worst both infer; each dict get/set is atomic.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """(size, st_mtime_ns) of a file, or of every file under a directory;
+    None for a path that is missing or not local."""
+    if "://" in path:
+        return None
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((st.st_size, st.st_mtime_ns),)
+        out = []
+        for d, _, names in os.walk(path):
+            for n in names:
+                st = os.stat(os.path.join(d, n))
+                out.append((os.path.relpath(os.path.join(d, n), path), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred once per file
+    identity and session inference confs (see the module docstring)."""
+    stamp = _file_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
 
 
 def _parquet_ts_unit(path: str) -> str | None:
@@ -71,19 +138,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         unit = _parquet_ts_unit(path)
         if unit == "ns":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path)
         elif unit is not None:
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path)
         else:
             # Probe couldn't tell (no pyarrow / multi-file dir): try the
             # plain read, and on Spark's TIMESTAMP(NANOS) rejection retry
             # with the legacy conf — same behavior the probe would have
             # picked, just discovered the expensive way.
             try:
-                df = spark.read.parquet(path)
+                df = _read_parquet(spark, path)
             except Exception:
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                df = spark.read.parquet(path)
+                df = _read_parquet(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             # integer DIV, not `/` — float division loses exactness at 1e18 ns
@@ -91,7 +158,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_parquet(spark, table_path(sf_dir, name))
 
 
 def register(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

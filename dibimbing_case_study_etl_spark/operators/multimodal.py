@@ -578,15 +578,22 @@ def _ahash_int_array(w) -> tuple[int, int]:
     the EXACT integer arithmetic :func:`phash_cols` defines (bit j set iff
     ``chunk_sum * L >= total_sum * chunk_len`` with bounds ``(j*L)//64``),
     vectorized: bounds via integer floor division, chunk sums from one
-    cumsum, bits packed with a dot against 2^j. Values stay inside int64
-    for any plausible input (cs·L ≤ max_val·L² < 2^63). Shared by the
-    real-decode path (:func:`decode_phash`, pixels) and the codepoint
-    stand-in path (:func:`phash_neardup_pairs`)."""
+    cumsum, bits packed with a dot against 2^j. Every product is bounded
+    by max|w|·L² (cs·L and total·chunk_len both are); an input where that
+    bound reaches 2^63 (e.g. ~2M characters at the largest codepoints)
+    raises ``OverflowError`` instead of letting numpy wrap into a wrong
+    hash. Shared by the real-decode path (:func:`decode_phash`, pixels)
+    and the codepoint stand-in path (:func:`phash_neardup_pairs`)."""
     import numpy as np
 
     pow2 = (1 << np.arange(32, dtype=np.int64)).astype(np.int64)
     w = w.reshape(-1).astype(np.int64)
     length = int(w.size)
+    if length and int(np.abs(w).max()) * length * length >= 1 << 63:
+        raise OverflowError(
+            f"aHash input of {length} values up to {int(np.abs(w).max())} "
+            "overflows int64 products (max|w|·L² ≥ 2^63)"
+        )
     total = int(w.sum())
     cum = np.concatenate(([0], np.cumsum(w)))
     bounds = (np.arange(65, dtype=np.int64) * length) // 64

@@ -7,16 +7,21 @@ The core primitive is a DISTRIBUTED PREFIX SUM — the global running token
 count in the packing order — built so no stage ever sees more than one
 bucket's rows:
 
+0. the input is materialized once; its partition count (sized by bytes
+   upstream: file splits, AQE coalescing) is the default bucket count;
 1. estimate ``num_buckets - 1`` boundary values of the ordering key with
-   one ``approxQuantile`` pass (driver state: the boundary list), and
+   one ``approxQuantile`` pass (driver state: the boundary list; skipped
+   for a single bucket), and
    assign every row a bucket id with a deterministic comparison
    expression — NOT ``repartitionByRange``, whose sampled boundaries
    differ between the two executions below and would silently mismatch
    offsets to rows;
 2. one aggregate computes each bucket's token total (``num_buckets``
    rows — KB-scale even with 100k buckets), which the driver turns into
-   exclusive offsets and broadcasts back;
-3. rows shuffle once on the bucket id; an Arrow-batched pass computes the
+   exclusive offsets and broadcasts back; their sum is the grand total
+   :func:`prefix_sum_with_total` returns;
+3. rows shuffle once on the bucket id (a single bucket merges the
+   partitions without a shuffle); an Arrow-batched pass computes the
    running sum inside each bucket (rows of a bucket are contiguous and
    sorted within a partition) and adds the bucket's offset.
 
@@ -47,7 +52,28 @@ def prefix_sum(
     """Inclusive prefix sum of ``value_col`` over the total order given by
     ``order_cols`` (which must be a unique key; the FIRST order column is
     used for range bucketing), without a single-partition window. Output =
-    input columns + ``out_col``.
+    input columns + ``out_col``. See :func:`prefix_sum_with_total`, which
+    also returns the grand total."""
+    return prefix_sum_with_total(df, value_col, order_cols, out_col, num_buckets)[0]
+
+
+def prefix_sum_with_total(
+    df: DataFrame,
+    value_col: str,
+    order_cols: list[str],
+    out_col: str = "cum",
+    num_buckets: int | None = None,
+) -> tuple[DataFrame, int]:
+    """:func:`prefix_sum` plus the grand total of ``value_col`` (the last
+    row's ``out_col``; 0 for an empty input), which the driver already
+    holds after the bucket-totals pass — a caller that needs it uses the
+    literal instead of re-aggregating the output.
+
+    Bucket count: ``num_buckets`` when given, else the partition count of
+    the materialized input. File splits and AQE partition coalescing
+    already size that count by bytes, so a small input gets one bucket —
+    no quantile pass and no shuffle — and a large one gets as many as its
+    upstream stage had tasks. The result is exact for any bucket count.
 
     Driver state is one boundary + one offset per bucket — bounded by the
     bucket count, not the data."""
@@ -61,7 +87,7 @@ def prefix_sum(
     df = df.localCheckpoint(eager=True)
 
     key = order_cols[0]
-    n_buckets = num_buckets or max(df.rdd.getNumPartitions(), 8)
+    n_buckets = num_buckets or max(df.rdd.getNumPartitions(), 1)
     probs = [i / n_buckets for i in range(1, n_buckets)]
     bounds = sorted(set(df.approxQuantile(key, probs, 0.001))) if probs else []
 
@@ -85,7 +111,10 @@ def prefix_sum(
         offsets[b] = acc
         acc += totals[b]
 
-    parts = wb.repartition(n_buckets, "__bkt").sortWithinPartitions("__bkt", *order_cols)
+    # one bucket: every row goes to one task anyway, so merge partitions
+    # in place instead of shuffling them there
+    grouped = wb.coalesce(1) if n_buckets == 1 else wb.repartition(n_buckets, "__bkt")
+    parts = grouped.sortWithinPartitions("__bkt", *order_cols)
 
     # per-bucket running sum + bucket offset (pure map stage; a partition
     # may hold several whole buckets — hash collisions — but never a
@@ -108,7 +137,7 @@ def prefix_sum(
         [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
         + [f"{out_col} bigint"]
     )
-    return parts.mapInPandas(add_offsets, schema=schema)
+    return parts.mapInPandas(add_offsets, schema=schema), int(acc)
 
 
 def pack_sequences(

@@ -517,8 +517,10 @@ def _assign_cells_seeded(
     SEQUENTIAL-IN-K (operation-for-operation the `functions.vector`
     fold, so every cosine is bitwise-identical), the clamp matches
     ``clamp_unit``, zero-norm vectors raise (ANSI divide-by-zero
-    contract), and the per-row top-``nprobe`` uses the window's exact
-    total order via lexsort on (cos desc, cell asc). ``cent_rows`` is
+    contract), non-finite elements raise (the JVM clamp ranked a NaN
+    cosine first, numpy's lexsort ranks it last — rather than silently
+    probe other cells, fail), and the per-row top-``nprobe`` uses the
+    window's exact total order via lexsort on (cos desc, cell asc). ``cent_rows`` is
     the collected (cell_id, vector) seed list — ncells rows of model
     state, the same driver-side footprint `ivf_fit_centroids` already
     carries for the production path."""
@@ -528,6 +530,10 @@ def _assign_cells_seeded(
     cell_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
     C = np.array([r[1] for r in cent_rows], dtype=np.float64)
     ncells, d = C.shape
+    if not np.isfinite(C).all():
+        raise ValueError(
+            "non-finite seed centroid element — filter NaN/Inf vectors upstream"
+        )
     ncsq = np.zeros(ncells)
     for k in range(d):
         col = C[:, k]
@@ -545,6 +551,11 @@ def _assign_cells_seeded(
             if not len(pdf):
                 continue
             M = np.array(list(pdf[vec_name]), dtype=np.float64)
+            if not np.isfinite(M).all():
+                raise ValueError(
+                    "non-finite embedding element in centroid assignment — "
+                    "filter NaN/Inf vectors upstream"
+                )
             n = len(pdf)
             D = np.zeros((n, ncells))
             nsq = np.zeros(n)
@@ -602,14 +613,18 @@ def ivf_cosine_topk_seeded(
     nprobe: int = 8,
 ) -> DataFrame:
     """:func:`ivf_cosine_topk` with SEEDED centroids (the ``ncells``
-    lowest-id corpus vectors) and JVM sequential-fold scoring throughout —
+    lowest-id corpus vectors) and sequential-fold cosines throughout —
     the driver-hash-checkable twin of the Lloyd-refined IVF path.
 
     Two deliberate differences from the production operator make every
     step reproducible in plain SQL: centroids come straight from the data
     (no Lloyd refinement — its distributed means are accumulation-order-
     dependent) and cell assignment ranks with the same clamped sequential
-    cosine the re-rank uses (no numpy/BLAS in the loop). Cell labels are
+    cosine the re-rank uses. Assignment runs in the numpy kernel
+    :func:`_assign_cells_seeded`, which accumulates sequentially in k (no
+    BLAS), so its cosines are bitwise-equal to the JVM fold
+    (``tests/test_llm_ops.py::test_assign_cells_seeded_matches_window_form``);
+    the in-cell re-rank is the JVM fold itself. Cell labels are
     the seed vectors' ids. The IVF STRUCTURE under audit is identical:
     nearest-cell corpus partitioning, ``nprobe`` probed cells per query,
     exact scoring only within probed cells, per-query top-k. Cosine is

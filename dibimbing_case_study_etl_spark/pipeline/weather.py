@@ -43,6 +43,7 @@ from dibimbing_case_study_etl_spark.schemas import (
     L1_UPDATE_COLS,
     L2_UPDATE_COLS,
     RAW_OPEN_METEO_SCHEMA,
+    STAGING_SCHEMA,
     WEATHER_COLUMNS,
     WEATHER_PK,
     WEATHER_SCHEMA,
@@ -150,7 +151,7 @@ def load_staging_to_l1(spark: SparkSession, staging_path: str, l1_path: str) -> 
     date/hour). In-batch duplicates: highest array position wins (the
     reference's sequential execute_values makes the last row win).
     """
-    src = spark.read.parquet(staging_path)
+    src = spark.read.schema(STAGING_SCHEMA).parquet(staging_path)
     version = merge_upsert(
         spark,
         TxLogTable(l1_path),

@@ -121,8 +121,8 @@ def q79_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     event arrays (an unbounded-fan-in ``collect_list(events)`` per user is
     the standard funnel anti-pattern at 100 TB; the min-after-join chain
     never materializes more than one timestamp per user per stage). The
-    stage table is three single-row broadcast aggregates exploded into
-    rows on the driver-free plan side.
+    stage table is one single-row global aggregate over the stage-tagged
+    users, exploded into rows on the driver-free plan side.
     """
     t = register(spark, sf_dir, ("events",))
     e = t["events"].select("user_id", "event_type", "ts")
@@ -138,8 +138,8 @@ def q79_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("t1").alias("t1"), F.min("ts").alias("t2"))
-        # consumed by the purchase join AND the broadcast n2/s21 aggregate;
-        # eager, so the broadcast thread never computes a lazy checkpoint
+        # consumed by the purchase join AND the stage aggregate; eager, so
+        # a broadcast thread never computes a lazy checkpoint
         # while the DAG scheduler does (a JVM deadlock seen under load)
         .localCheckpoint()
     )
@@ -151,24 +151,20 @@ def q79_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("t2").alias("t2"), F.min("ts").alias("t3"))
     )
     us = lambda a, b: F.unix_micros(F.col(b)) - F.unix_micros(F.col(a))  # noqa: E731
-    m = (
-        v.agg(F.count(F.lit(1)).alias("n1"))
-        .crossJoin(
-            F.broadcast(
-                c.agg(
-                    F.count(F.lit(1)).alias("n2"),
-                    F.sum(us("t1", "t2")).alias("s21"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(
-                p.agg(
-                    F.count(F.lit(1)).alias("n3"),
-                    F.sum(us("t2", "t3")).alias("s32"),
-                )
-            )
-        )
+    # n1, n2/s21 and n3/s32 from ONE global aggregate over the stage-tagged
+    # users (d = microseconds since the previous stage)
+    staged = (
+        v.select(F.lit(1).alias("stage"), F.lit(None).cast("bigint").alias("d"))
+        .unionByName(c.select(F.lit(2).alias("stage"), us("t1", "t2").alias("d")))
+        .unionByName(p.select(F.lit(3).alias("stage"), us("t2", "t3").alias("d")))
+    )
+    at = lambda k, col: F.when(F.col("stage") == k, col)  # noqa: E731
+    m = staged.agg(
+        F.count(at(1, F.lit(1))).alias("n1"),
+        F.count(at(2, F.lit(1))).alias("n2"),
+        F.sum(at(2, F.col("d"))).alias("s21"),
+        F.count(at(3, F.lit(1))).alias("n3"),
+        F.sum(at(3, F.col("d"))).alias("s32"),
     )
     hours = lambda s, n: F.when(  # noqa: E731
         F.col(n) > 0,

@@ -767,19 +767,20 @@ def g03_supply_chain_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier against the deduplicated edge table followed by a frontier
     DISTINCT, so per-hop state is (seed, node) pairs, never paths; the
     seed side stays broadcast-sized throughout. Depth is fixed, so no
-    driver-side convergence loop."""
+    driver-side convergence loop. The three per-hop counts come from one
+    aggregate over the hop-tagged frontiers, not three aggregates joined."""
     t = register(spark, sf_dir, ("lineitem",))
     # the edge table is probed once per hop — materialize the distinct
     # result so the fact scan + dedup shuffle run once, not three times
     # (the cluster-scale analogue is .persist() on the edge RDD every BFS
     # implementation carries)
     e = t["lineitem"].select("l_suppkey", "l_partkey").distinct().localCheckpoint(eager=True)
-    h1 = (
-        e.filter(F.col("l_suppkey").isin(*_G03_SEEDS))
-        .select(F.col("l_suppkey").alias("seed"), F.col("l_partkey").alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # e is distinct on (suppkey, partkey), so the 1-hop frontier is a
+    # plain filtered projection of it: no DISTINCT, no materialization
+    h1 = e.filter(F.col("l_suppkey").isin(*_G03_SEEDS)).select(
+        F.col("l_suppkey").alias("seed"), F.col("l_partkey").alias("p")
     )
+    # two consumers (the 3rd hop's broadcast side and the hop counts)
     h2 = (
         F.broadcast(h1)
         .join(e, e["l_partkey"] == h1["p"])
@@ -793,10 +794,29 @@ def g03_supply_chain_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("seed", F.col("l_partkey").alias("p"))
         .distinct()
     )
-    c1 = h1.groupBy("seed").agg(F.count("*").cast("bigint").alias("n_parts_1hop"))
-    c2 = h2.groupBy("seed").agg(F.count("*").cast("bigint").alias("n_suppliers_2hop"))
-    c3 = h3.groupBy("seed").agg(F.count("*").cast("bigint").alias("n_parts_3hop"))
-    return c1.join(c2, "seed").join(c3, "seed").orderBy("seed")
+    # the three per-hop counts from ONE aggregate over the hop-tagged
+    # frontiers; a seed missing from any hop is dropped (inner-join
+    # semantics of the per-hop counts)
+    hops = (
+        h1.select("seed", F.lit(1).alias("hop"))
+        .unionByName(h2.select("seed", F.lit(2).alias("hop")))
+        .unionByName(h3.select("seed", F.lit(3).alias("hop")))
+    )
+    n_hop = lambda k: F.count(F.when(F.col("hop") == k, 1)).cast("bigint")  # noqa: E731
+    return (
+        hops.groupBy("seed")
+        .agg(
+            n_hop(1).alias("n_parts_1hop"),
+            n_hop(2).alias("n_suppliers_2hop"),
+            n_hop(3).alias("n_parts_3hop"),
+        )
+        .filter(
+            (F.col("n_parts_1hop") > 0)
+            & (F.col("n_suppliers_2hop") > 0)
+            & (F.col("n_parts_3hop") > 0)
+        )
+        .orderBy("seed")
+    )
 
 
 # --- f05: EWMA one-step-ahead backtest vs naive -----------------------------
@@ -1109,29 +1129,25 @@ def t45_batch_padding_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic on the rank, and the two roll-ups aggregate by (nb,
     bucket, batch) with map-side combine. Exact-integer waste sums."""
     from dibimbing_case_study_etl_spark.functions.text import token_count
-    from dibimbing_case_study_etl_spark.operators.packing import prefix_sum
+    from dibimbing_case_study_etl_spark.operators.packing import prefix_sum_with_total
 
     t = register(spark, sf_dir, ("documents",))
     docs = t["documents"].select(
         "doc_id", token_count(F.col("text")).alias("n_tokens")
     ).withColumn("one", F.lit(1))
-    # two consumers (total count + bucket assignment): checkpoint the
-    # NARROW ranked projection (a few longs per row) so the bucketed
-    # shuffle-sort inside prefix_sum runs once (the t11 lesson)
-    ranked = prefix_sum(docs, "one", ["n_tokens", "doc_id"], out_col="rank").localCheckpoint(
-        eager=True
-    )
-    n_tot = F.broadcast(ranked.agg(F.count("*").alias("n")))
+    # the document count is the prefix sum's grand total, already on the
+    # driver: a literal, so ``ranked`` has one consumer and is not
+    # materialized again
+    ranked, n_docs = prefix_sum_with_total(docs, "one", ["n_tokens", "doc_id"], out_col="rank")
+    n = F.lit(n_docs).cast("bigint")
     r1 = F.col("rank") - 1
-    bucket = F.floor((r1 * F.col("nb")).cast("double") / F.col("n"))
-    bstart = F.ceil((bucket * F.col("n")).cast("double") / F.col("nb"))
+    bucket = F.floor((r1 * F.col("nb")).cast("double") / n)
+    bstart = F.ceil((bucket * n).cast("double") / F.col("nb"))
     assigned = (
-        ranked.crossJoin(n_tot)
-        .select(
+        ranked.select(
             "n_tokens",
-            F.explode(F.array(*[F.lit(n) for n in _T45_NBS])).alias("nb"),
+            F.explode(F.array(*[F.lit(b) for b in _T45_NBS])).alias("nb"),
             "rank",
-            "n",
         )
         .select(
             "nb",

@@ -50,6 +50,15 @@ WEATHER_SCHEMA = T.StructType(
 )
 
 WEATHER_COLUMNS = tuple(f.name for f in WEATHER_SCHEMA.fields)
+
+# Staging Parquet: the contract plus ``pos``, the hourly array position
+# that L1's last-row-wins arbitration orders by. Readers pass it to
+# ``spark.read.schema`` so no footer-inference job runs; nullable because
+# Spark reads every file-source column as nullable.
+STAGING_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, nullable=True) for f in WEATHER_SCHEMA.fields]
+    + [T.StructField("pos", T.IntegerType(), nullable=True)]
+)
 WEATHER_PK = ("ts", "latitude", "longitude", "source")
 
 # Conflict-update column sets — the two upserts differ deliberately

@@ -9,8 +9,12 @@ Usage: python scripts/profile_queries.py out.json [name,name,...] [--passes=N]
 Defaults to the bench=True headline set. Each query is warmed once at
 sf0.001 (plan/codegen warmup, same as bench.py) and then timed --passes
 times at $SPARK_GRAFT_SF_DIR (default sf0.1); per-query min is reported.
-Job/stage/task counts come from the status tracker delta around the timed
-region of the LAST pass.
+Every build + action of every pass runs under its own job group
+(``profile:<name>:<pass>``), so the eager actions inside ``build()`` count
+against their query. The job, stage, task and shuffle-byte counts are
+those of the LAST pass; stages count only the ones that ran (a stage whose
+shuffle output is reused is skipped, not counted). The last line totals
+seconds and jobs over every profiled query.
 """
 
 from __future__ import annotations
@@ -21,6 +25,31 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _group_stats(sc, group: str) -> dict[str, int]:
+    """Jobs, stages that ran, their tasks and shuffle bytes, for one job group."""
+    from py4j.protocol import Py4JJavaError
+
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    tracker = sc.statusTracker()
+    out = {"jobs": 0, "stages": 0, "tasks": 0, "shuffle_bytes": 0}
+    for job in tracker.getJobIdsForGroup(group):
+        out["jobs"] += 1
+        info = tracker.getJobInfo(job)
+        for sid in info.stageIds if info else ():
+            try:
+                sd = store.lastStageAttempt(sid)
+            except Py4JJavaError:  # a stage that never ran has no attempt
+                continue
+            if sd.status().toString() != "COMPLETE":
+                continue
+            out["stages"] += 1
+            out["tasks"] += sd.numCompleteTasks()
+            out["shuffle_bytes"] += sd.shuffleReadBytes() + sd.shuffleWriteBytes()
+    return out
 
 
 def main() -> None:
@@ -45,39 +74,46 @@ def main() -> None:
 
     spark = get_spark(app_name="profile-queries")
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
     results: dict[str, dict] = {}
     for name in names:
         spec = registry[name]
-        sc.setJobDescription(f"warmup:{name}")
+        sc.setJobGroup(f"warmup:{name}", f"warmup:{name}")
         if os.path.isdir(smoke):
             try:
                 spec.build(spark, smoke).write.mode("overwrite").format("noop").save()
             except Exception as exc:  # noqa: BLE001
                 results[name] = {"error": f"warmup: {type(exc).__name__}: {exc}"}
+                print(json.dumps({"q": name, **results[name]}), flush=True)
                 continue
-        best = None
         samples = []
-        for _ in range(passes):
-            sc.setJobDescription(f"profile:{name}")
+        for p in range(passes):
+            group = f"profile:{name}:{p}"
+            sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             try:
                 spec.build(spark, sf_dir).write.mode("overwrite").format("noop").save()
             except Exception as exc:  # noqa: BLE001
                 results[name] = {"error": f"{type(exc).__name__}: {exc}"}
                 break
-            dt = time.perf_counter() - t0
-            samples.append(round(dt, 3))
-            best = dt if best is None else min(best, dt)
+            samples.append(round(time.perf_counter() - t0, 3))
         else:
-            results[name] = {"sec": round(best, 3), "samples": samples}
-            print(json.dumps({"q": name, **results[name]}), flush=True)
-            continue
+            results[name] = {"sec": min(samples), "samples": samples, **_group_stats(sc, group)}
         print(json.dumps({"q": name, **results[name]}), flush=True)
+    sc.setLocalProperty("spark.jobGroup.id", None)
     with open(out_path, "w") as fh:
         json.dump(results, fh, indent=1, sort_keys=True)
-    total = sum(r.get("sec", 0) for r in results.values())
-    print(json.dumps({"total_sec": round(total, 3), "n": len(results)}))
+    ok = [r for r in results.values() if "sec" in r]
+    print(
+        json.dumps(
+            {
+                "total_sec": round(sum(r["sec"] for r in ok), 3),
+                "total_jobs": sum(r["jobs"] for r in ok),
+                "total_tasks": sum(r["tasks"] for r in ok),
+                "n": len(results),
+                "errors": len(results) - len(ok),
+            }
+        )
+    )
 
 
 if __name__ == "__main__":

@@ -285,6 +285,34 @@ def test_prefix_sum_matches_window_and_is_layout_invariant(spark):
     assert m2 == t
 
 
+def test_prefix_sum_exact_at_one_and_data_sized_bucket_counts(spark, sf_dir):
+    """One bucket (no quantile pass, no shuffle) and the default bucket
+    count (the materialized input's partition count) both equal the
+    window ground truth, and the returned total is the value sum."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    from dibimbing_case_study_etl_spark.catalog import load_table
+    from dibimbing_case_study_etl_spark.operators.packing import prefix_sum_with_total
+
+    docs = load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", (F.col("doc_id") * 7919 % 1000).alias("k"),
+                       F.col("n_chars").alias("v"))
+    truth = {
+        r.doc_id: r.cum
+        for r in base.withColumn(
+            "cum", F.sum("v").over(W.orderBy("k", "doc_id").rowsBetween(W.unboundedPreceding, 0))
+        ).collect()
+    }
+    value_sum = base.agg(F.sum("v")).first()[0]
+    for layout, buckets in ((base, 1), (base, None), (base.repartition(5), None), (base.repartition(3), 1)):
+        out, total = prefix_sum_with_total(layout, "v", ["k", "doc_id"], "cum", buckets)
+        assert {r.doc_id: r.cum for r in out.collect()} == truth, (layout.rdd.getNumPartitions(), buckets)
+        assert total == value_sum == max(truth.values())
+    empty, total = prefix_sum_with_total(base.filter("false"), "v", ["k", "doc_id"], "cum")
+    assert total == 0 and empty.count() == 0
+
+
 def test_semdedup_precision_exact_and_recall_pinned(spark):
     """SemDeDup must (a) return ONLY true near-dup pairs (exact cosine on
     in-cell candidates ⇒ precision 1.0 by construction), (b) reach recall
@@ -406,6 +434,53 @@ def test_assign_cells_seeded_matches_window_form(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_assign_cells_seeded_rejects_non_finite(spark):
+    """A NaN or Inf element (in a centroid or in a batch row) raises
+    instead of silently ranking a NaN cosine last."""
+    from dibimbing_case_study_etl_spark.operators.similarity import _assign_cells_seeded
+
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    ok = spark.createDataFrame([(1, [1.0, 2.0]), (2, [3.0, 1.0])], "__id long, __v array<double>")
+    assert {r.cell for r in _assign_cells_seeded(ok, cents, 1, "__id", "__v").collect()} == {0, 1}
+    with pytest.raises(ValueError, match="non-finite seed centroid"):
+        _assign_cells_seeded(ok, [(0, [1.0, float("nan")]), (1, [0.0, 1.0])], 1, "__id", "__v")
+    for bad in (float("nan"), float("inf")):
+        df = spark.createDataFrame([(1, [1.0, 2.0]), (2, [bad, 1.0])], "__id long, __v array<double>")
+        with pytest.raises(Exception, match="non-finite embedding element"):
+            _assign_cells_seeded(df, cents, 1, "__id", "__v").collect()
+
+
+def test_ahash_int_array_refuses_int64_wrap():
+    """The aHash bit test ``cs·L >= total·chunk_len`` in numpy int64 must
+    equal the same test in Python ints while it fits, and raise rather
+    than wrap once max|w|·L² reaches 2^63."""
+    import numpy as np
+
+    from dibimbing_case_study_etl_spark.operators.multimodal import _ahash_int_array
+
+    def reference(w):
+        w = [int(x) for x in w]
+        n, total = len(w), sum(w)
+        bits = []
+        for j in range(64):
+            lo, hi = j * n // 64, (j + 1) * n // 64
+            bits.append(int(sum(w[lo:hi]) * n >= total * (hi - lo)))
+        return sum(b << j for j, b in enumerate(bits[:32])), sum(b << j for j, b in enumerate(bits[32:]))
+
+    rng = np.random.default_rng(7)
+    for n in (1, 63, 64, 1000):
+        w = rng.integers(0, 256, n)
+        assert _ahash_int_array(w) == reference(w)
+    # the largest value that still fits: max|w|·L² just below 2^63
+    n = 1024
+    w = np.full(n, (1 << 63) // (n * n) - 1, dtype=np.int64)
+    w[: n // 2] = 0
+    assert _ahash_int_array(w) == reference(w)
+    # 2^50 per value over 1024 values: cs·L = 2^64 would wrap
+    with pytest.raises(OverflowError, match="overflows int64"):
+        _ahash_int_array(np.full(n, 1 << 50, dtype=np.int64))
 
 
 def test_d12_exact_under_boilerplate_skew(spark, tmp_path):

@@ -297,3 +297,21 @@ def test_non_local_table_root_fails_before_any_stage(spark, tmp_path):
     with pytest.raises(ValueError, match="not a local path"):
         run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(4))
     assert not (tmp_path / "raw").exists()
+
+
+def test_staging_schema_is_what_spark_infers(spark, cfg):
+    """L1 reads staging with ``STAGING_SCHEMA`` instead of inferring it
+    (one Spark job per day saved); the declared schema must be exactly
+    what inference returns for the file the normalize stage writes, and
+    the declared read must run no job before its action."""
+    from dibimbing_case_study_etl_spark.schemas import STAGING_SCHEMA
+
+    staging = run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(24))["staging"]
+    assert spark.read.parquet(staging).schema == STAGING_SCHEMA
+    sc = spark.sparkContext
+    sc.setJobGroup("staging-schema", "staging-schema")
+    try:
+        spark.read.schema(STAGING_SCHEMA).parquet(staging)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("staging-schema") == []
